@@ -59,6 +59,14 @@ _STOPWORDS_SORTED = sorted(STOPWORDS)
 # (reference is_not_stopword, nlp_preprocessing.py:38-39).
 _SQL_STOPWORD_LIST = ", ".join("'" + w.replace("'", "''") + "'" for w in _STOPWORDS_SORTED)
 
+# The same set as ONE Spark SQL expression, parsed in a single JVM call
+# (``isin(*words)`` makes one py4j literal call per word). Quotes are
+# backslash-escaped: Spark joins adjacent string literals, so the
+# DuckDB-style 'don''t' would read as "dont".
+_SPARK_STOPWORD_ARRAY = (
+    "array(" + ", ".join("'" + w.replace("'", "\\'") + "'" for w in _STOPWORDS_SORTED) + ")"
+)
+
 
 def clean_word_expr(word: Column) -> Column:
     """Native F1+F3+F5: strip spaces, strip non-alphanumerics, lowercase.
@@ -99,9 +107,10 @@ def embedding_text_expr(text: Column, max_text_length: int = 150) -> Column:
     """
     truncated = F.substring(text, 1, max_text_length)
     words = F.split(truncated, r"\s+")
+    stop = F.expr(_SPARK_STOPWORD_ARRAY)
     kept = F.filter(
         words,
-        lambda w: (w != "") & (~w.isin(*_STOPWORDS_SORTED)) & (w != F.lit("NaN")),
+        lambda w: (w != "") & (~F.array_contains(stop, w)) & (w != F.lit("NaN")),
     )
     cleaned = F.transform(kept, clean_word_expr)
     return F.array_join(F.array_distinct(cleaned), " ")

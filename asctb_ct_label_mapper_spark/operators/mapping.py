@@ -7,8 +7,14 @@ results with masked writes (main.py:206-211), then
 
 Engine: ONE lazy DataFrame plan (SURVEY §3.2):
 
-    seed -> clean (F8) -> encode (F12) -> broadcast cross join + cosine (J3/F13)
-         -> window top-k (A1) -> pivot rank->columns (A2)
+    seed (hash-partitioned to defaultParallelism, dedup)
+         -> top-k (A1), by rung:
+              join:    clean (F8) -> encode (F12) -> broadcast cross join
+                       + cosine (J3/F13) -> window top-k
+              blocked: score(encode(clean(raw))) as ONE ArrowEvalPython
+                       chain per task -> posexplode_outer; payload joined
+                       back by CT_ID
+         -> pivot rank->columns (A2)
          -> exact-overwrite left join (J1) + rank>1 null-out (J2)
 
 Divergences from the reference, both deliberate (SURVEY §4 item 3):
@@ -39,6 +45,7 @@ from asctb_ct_label_mapper_spark.functions.vector import stub_encode_udf
 from asctb_ct_label_mapper_spark.operators.similarity import (
     REF_BROADCAST_BUDGET_BYTES,
     choose_similarity_impl,
+    reference_stats,
     similarity_topk,
     top_k_similarity_join,
 )
@@ -109,7 +116,19 @@ def map_labels_to_reference(
     the same budget flag. Exact rungs are hash-identical (proven by
     cos_topk_join / cos_topk_blocked sharing one oracle).
     """
-    seed = labels.select("source", "raw_input_label").dropDuplicates()
+    # Hash-partition the seed to the session's parallelism: the explicit
+    # count survives AQE coalescing, so the clean -> encode -> score chain
+    # runs on every core instead of in the one task a ~10^4-row seed would
+    # coalesce to. Hashing on raw_input_label alone (a subset of the dedup
+    # key) already clusters the dedup, and stays valid when ``source`` is
+    # a literal the aggregate re-aliases.
+    seed = (
+        labels.select("source", "raw_input_label")
+        .repartition(
+            labels.sparkSession.sparkContext.defaultParallelism, "raw_input_label"
+        )
+        .dropDuplicates()
+    )
     cleaned = seed.withColumn("cleaned_input_label", clean(F.col("raw_input_label")))
     encoded = cleaned.withColumn("embedding", encoder(F.col("cleaned_input_label")))
 
@@ -132,11 +151,7 @@ def map_labels_to_reference(
         # route on cheap statistics: ref count+dim off the persisted
         # projection, query count off the pre-encode seed (same row
         # count as `encoded`, skips running the encoder UDF chain)
-        ref_stats = reference.agg(
-            F.count(F.lit(1)).alias("c"),
-            F.first(F.size("embedding")).alias("d"),
-        ).collect()[0]
-        n_refs, dim = ref_stats["c"], ref_stats["d"] or 0
+        n_refs, dim = reference_stats(reference, "embedding")
         rung = choose_similarity_impl(seed.count(), n_refs, dim)
         ref_in_budget = n_refs * dim * 8 <= REF_BROADCAST_BUDGET_BYTES
     else:

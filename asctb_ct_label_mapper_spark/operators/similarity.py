@@ -13,11 +13,15 @@ one logical API:
    window shuffles on the query key. Correct and simple; right whenever the
    reference side fits in a broadcast (the reference table is 83 rows; even
    1e6 x 64 floats is ~256 MB — beyond that use strategy 2).
-2. ``top_k_similarity_blocked`` — ``mapInPandas`` over the (large) query
-   side with the reference matrix broadcast once per executor as a numpy
-   array: per Arrow batch, one blocked matmul + ``argpartition`` top-k, no
-   window, no shuffle at all. This is the 100 TB path: queries stream
-   through executors, reference stays resident, output is k rows per query.
+2. ``top_k_similarity_blocked`` — a scalar pandas UDF over the (large)
+   query side with the reference matrix broadcast once per executor as a
+   numpy array: per Arrow batch, one blocked matmul + ``argpartition``
+   top-k returned as ``array<struct<ref_id, score>>``, then
+   ``posexplode_outer`` to k rows per query; no window, no shuffle at all.
+   This is the 100 TB path: queries stream through executors, reference
+   stays resident. Being a scalar UDF, it chains with the pandas UDFs that
+   produce the query vector into one Python worker per task, so those
+   vectors never cross back into the JVM.
 
 Both produce identical rows: query id columns + ``ref_id`` + ``score`` +
 ``rank`` (rank 1..k, ties broken by ascending ref id — the engine's
@@ -87,6 +91,17 @@ def top_k_similarity_join(
     )
 
 
+def reference_stats(reference: DataFrame, vec_col: str) -> tuple[int, int]:
+    """(row count, vector dim) of a reference in ONE aggregate job — the
+    two statistics the rung router and the broadcast-budget guard read.
+    The dim probe is ``size(first(vec))``; an empty reference reads dim 0."""
+    row = reference.agg(
+        F.count(F.lit(1)).alias("c"),
+        F.first(F.size(vec_col)).alias("d"),
+    ).collect()[0]
+    return row["c"], row["d"] or 0
+
+
 def _guard_ref_collect(
     reference: DataFrame, vec_col: str, rung: str
 ) -> None:
@@ -96,9 +111,7 @@ def _guard_ref_collect(
     driver when handed a beyond-broadcast reference (r13 ADVICE —
     ``choose_similarity_impl`` never routes such a reference here, but
     explicit callers hit the collect directly)."""
-    n_refs = reference.count()
-    probe = reference.select(F.size(vec_col).alias("d")).first()
-    dim = int(probe["d"]) if probe is not None and probe["d"] is not None else 0
+    n_refs, dim = reference_stats(reference, vec_col)
     ref_bytes = n_refs * dim * 8
     if ref_bytes > REF_BROADCAST_BUDGET_BYTES:
         raise ValueError(
@@ -120,17 +133,41 @@ def top_k_similarity_blocked(
     query_vec_col: str = "embedding",
     ref_vec_col: str = "embedding",
 ) -> DataFrame:
-    """Blocked-matmul top-k via ``mapInPandas`` (exact, strategy 2).
+    """Blocked-matmul top-k via a scalar pandas UDF (exact, strategy 2).
 
     The reference matrix is collected once on the driver, L2-normalized, and
     shipped to executors via a broadcast variable; each Arrow batch of
-    queries does one dense matmul + ``argpartition``. Per-query cost is
+    queries does one dense matmul + ``argpartition`` and returns, per query,
+    its top-k as ``array<struct<ref_id, score>>`` in rank order, which
+    ``posexplode_outer`` turns into the long form. Per-query cost is
     O(c*d) flops with zero shuffle — the Window shuffle of strategy 1 is
-    gone, so the plan is scan -> mapInPandas -> done, and it scales linearly
-    in the query count with the reference resident in executor memory.
+    gone, so the plan is scan -> score -> generate, linear in the query
+    count with the reference resident in executor memory.
+
+    Scoring is a scalar UDF rather than ``mapInPandas`` so Catalyst chains
+    it with the pandas UDFs that produce the query vector (the flagship's
+    ``score(encode(clean(raw)))``) into ONE ArrowEvalPython worker per task:
+    query vectors never cross back into the JVM. The generator is
+    ``posexplode_outer`` on purpose — a non-outer generator lets
+    ``InferFiltersFromGenerate`` push ``size(matches) > 0`` below the
+    query side's shuffle, evaluating the whole UDF chain a second time.
+    A null query vector yields one row with null ``ref_id``/``score``/``rank``.
     """
+    match_fields = [
+        T.StructField("ref_id", reference.schema[ref_id_col].dataType),
+        T.StructField("score", T.DoubleType()),
+    ]
     _guard_ref_collect(reference, ref_vec_col, "top_k_similarity_blocked")
     ref_rows = reference.select(ref_id_col, ref_vec_col).collect()
+    if not ref_rows:
+        # no reference, no matches: the declared long form, zero rows
+        id_fields = [queries.schema[c] for c in query_id_cols]
+        return queries.sparkSession.createDataFrame(
+            [],
+            T.StructType(
+                [*id_fields, *match_fields, T.StructField("rank", T.IntegerType())]
+            ),
+        )
     ref_ids = np.array([r[0] for r in ref_rows])
     ref_mat = np.array([r[1] for r in ref_rows], dtype=np.float64)
     ref_norms = np.linalg.norm(ref_mat, axis=1)
@@ -140,66 +177,69 @@ def top_k_similarity_blocked(
     sc = queries.sparkSession.sparkContext
     b_ids = sc.broadcast(ref_ids)
     b_mat = sc.broadcast(ref_unit)
-
-    id_fields = [queries.schema[c] for c in query_id_cols]
-    out_schema = T.StructType(
-        [*id_fields]
-        + [
-            T.StructField("ref_id", reference.schema[ref_id_col].dataType),
-            T.StructField("score", T.DoubleType()),
-            T.StructField("rank", T.IntegerType()),
-        ]
-    )
-    # Matmul cost follows rows, not scan bytes: a small-but-dense embedding
-    # file scans as 1 partition and would run the whole matmul on one core.
-    narrowed = ensure_min_partitions(queries.select(*query_id_cols, query_vec_col))
     kk = k
 
-    def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    @F.pandas_udf(T.ArrayType(T.StructType(match_fields)))
+    def blocked_topk_scores(vecs: pd.Series) -> pd.Series:
         mat = b_mat.value
         ids = b_ids.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            q = np.array(pdf[query_vec_col].to_list(), dtype=np.float64)
-            qn = np.linalg.norm(q, axis=1)
-            qn[qn == 0.0] = 1.0
-            sims = (q / qn[:, None]) @ mat.T  # (batch, c)
-            n_rows, n_ref = sims.shape
-            top = min(kk, n_ref)
-            # argpartition gets the top set in O(c); exact order + id
-            # tiebreak resolved on the k-sized slice only — all rows at
-            # once (no per-row Python in the common case).
-            part = np.argpartition(-sims, top - 1, axis=1)[:, :top]
-            row_idx = np.arange(n_rows)[:, None]
-            sel_scores = sims[row_idx, part]
-            kth = sel_scores.min(axis=1)
-            # Order each row's slice by (score DESC, id ASC), matching the
-            # window strategy's row_number ordering: stable-argsort by id,
-            # then stable-argsort by -score — equal scores keep the id order.
-            ord_id = np.argsort(ids[part], axis=1, kind="stable")
-            ord_score = np.argsort(
-                -np.take_along_axis(sel_scores, ord_id, axis=1), axis=1, kind="stable"
+        present = vecs.notna().to_numpy()
+        if not present.any():
+            return pd.Series([None] * len(vecs), dtype=object)
+        q = np.array(vecs[present].to_list(), dtype=np.float64)
+        qn = np.linalg.norm(q, axis=1)
+        qn[qn == 0.0] = 1.0
+        sims = (q / qn[:, None]) @ mat.T  # (batch, c)
+        n_rows, n_ref = sims.shape
+        top = min(kk, n_ref)
+        # argpartition gets the top set in O(c); exact order + id
+        # tiebreak resolved on the k-sized slice only — all rows at
+        # once (no per-row Python in the common case).
+        part = np.argpartition(-sims, top - 1, axis=1)[:, :top]
+        row_idx = np.arange(n_rows)[:, None]
+        sel_scores = sims[row_idx, part]
+        kth = sel_scores.min(axis=1)
+        # Order each row's slice by (score DESC, id ASC), matching the
+        # window strategy's row_number ordering: stable-argsort by id,
+        # then stable-argsort by -score — equal scores keep the id order.
+        ord_id = np.argsort(ids[part], axis=1, kind="stable")
+        ord_score = np.argsort(
+            -np.take_along_axis(sel_scores, ord_id, axis=1), axis=1, kind="stable"
+        )
+        chosen = np.take_along_axis(part, np.take_along_axis(ord_id, ord_score, axis=1), axis=1)
+        # argpartition cuts ties at the k-th score ARBITRARILY — when a
+        # row has MORE than `top` scores >= its k-th score, ids outside
+        # the slice may deserve inclusion. Only those rows (exact float
+        # ties, rare) take the widened per-row path.
+        tied = np.flatnonzero((sims >= kth[:, None]).sum(axis=1) > top)
+        for row_i in tied:
+            cand = np.flatnonzero(sims[row_i] >= kth[row_i])
+            order = np.lexsort((ids[cand], -sims[row_i, cand]))
+            chosen[row_i] = cand[order][:top]
+        found = iter(
+            list(zip(r_ids, r_scores))
+            for r_ids, r_scores in zip(
+                ids[chosen].tolist(), sims[row_idx, chosen].tolist()
             )
-            chosen = np.take_along_axis(part, np.take_along_axis(ord_id, ord_score, axis=1), axis=1)
-            # argpartition cuts ties at the k-th score ARBITRARILY — when a
-            # row has MORE than `top` scores >= its k-th score, ids outside
-            # the slice may deserve inclusion. Only those rows (exact float
-            # ties, rare) take the widened per-row path.
-            tied = np.flatnonzero((sims >= kth[:, None]).sum(axis=1) > top)
-            for row_i in tied:
-                cand = np.flatnonzero(sims[row_i] >= kth[row_i])
-                order = np.lexsort((ids[cand], -sims[row_i, cand]))
-                chosen[row_i] = cand[order][:top]
-            out = {
-                c: np.repeat(pdf[c].to_numpy(), top) for c in query_id_cols
-            }
-            out["ref_id"] = ids[chosen].ravel()
-            out["score"] = sims[row_idx, chosen].ravel()
-            out["rank"] = np.tile(np.arange(1, top + 1, dtype=np.int32), n_rows)
-            yield pd.DataFrame(out)
+        )
+        return pd.Series([next(found) if p else None for p in present])
 
-    return narrowed.mapInPandas(score_batches, schema=out_schema)
+    # Matmul cost follows rows, not scan bytes: a small-but-dense embedding
+    # file scans as 1 partition and would run the whole matmul on one core.
+    # The score is projected BEFORE the generator: CollapseProject only
+    # chains it into the vector's UDF projection from a Project, never
+    # from inside a Generate.
+    narrowed = ensure_min_partitions(queries.select(*query_id_cols, query_vec_col))
+    return narrowed.select(
+        *query_id_cols, blocked_topk_scores(F.col(query_vec_col)).alias("_m")
+    ).select(
+        *query_id_cols, F.posexplode_outer("_m").alias("_pos", "_match")
+    ).select(
+        *query_id_cols,
+        F.col("_match.ref_id").alias("ref_id"),
+        F.col("_match.score").alias("score"),
+        (F.col("_pos") + 1).alias("rank"),
+    )
 
 
 def ivf_topk(
@@ -1469,11 +1509,7 @@ def similarity_topk(
     broadcast scale, where exact is off the table anyway.
     """
     if impl == "auto":
-        ref_stats = reference.agg(
-            F.count(F.lit(1)).alias("c"),
-            F.first(F.size(ref_vec_col)).alias("d"),
-        ).collect()[0]
-        n_refs, dim = ref_stats["c"], ref_stats["d"] or 0
+        n_refs, dim = reference_stats(reference, ref_vec_col)
         impl = choose_similarity_impl(
             queries.count(), n_refs, dim, bool(ref_payload_cols)
         )

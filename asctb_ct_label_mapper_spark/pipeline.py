@@ -57,8 +57,12 @@ def build_reference_embeddings(
 
     ct = ct_triplet_unpivot(raw_sheet)  # P1-P5, R1-R3
     enriched = enrich_with_definitions(ct, fixture=ontology_fixture)  # S4, F10, F11, P6
+    # hash-partition to the session's parallelism so the clean/encode
+    # crossings run on every core (AQE would coalesce a reference-sized
+    # frame into one task)
     encoded = (
-        enriched.withColumn("ct_name_cleaned", clean(F.col("CT_NAME")))
+        enriched.repartition(spark.sparkContext.defaultParallelism, "CT_ID")
+        .withColumn("ct_name_cleaned", clean(F.col("CT_NAME")))
         .withColumn("_embed_text", embedding_text_expr(F.col("all_text"), max_text_length))
         .withColumn("embedding", encoder(F.col("_embed_text")))
         .drop("_embed_text")

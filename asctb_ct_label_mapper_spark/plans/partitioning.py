@@ -27,9 +27,13 @@ def ensure_min_partitions(df: DataFrame, min_partitions: int | None = None) -> D
     Call this on SCAN-ROOTED frames (scan/filter/project lineage only):
     the width probe converts to an RDD, and under AQE that finalizes the
     physical plan — for a frame that already contains shuffles it can
-    trigger eager stage execution. Every in-repo call site passes a plain
-    scan projection; post-shuffle frames don't need widening anyway (they
-    already have ``spark.sql.shuffle.partitions`` partitions)."""
+    trigger eager stage execution. In-repo call sites pass plain scan
+    projections, with one exception: the flagship mapping's label seed
+    reaches the blocked rung after its own explicit
+    ``repartition(defaultParallelism, "raw_input_label")``, so the probe
+    runs only that small shuffle stage and finds the frame wide enough —
+    no round-robin re-spreads its 768-d vectors. (Without that explicit
+    count, AQE would have coalesced the seed to one partition.)"""
     if min_partitions is None:
         min_partitions = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= min_partitions:

@@ -1325,8 +1325,8 @@ def cos_topk_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("cos_topk_blocked", _COS_TOPK_ORACLE)
 def cos_topk_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same logical operator, physical strategy 2 (blocked matmul via
-    mapInPandas, zero shuffle) — hash-matched against the SAME oracle to
+    """Same logical operator, physical strategy 2 (blocked matmul in a
+    scalar pandas UDF, zero shuffle) — hash-matched against the SAME oracle to
     prove plan-equivalence of the scale path."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 10 == 0).select("vec_id", "embedding")

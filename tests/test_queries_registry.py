@@ -78,17 +78,18 @@ def test_q5_plan_broadcasts_dims(spark, sf_dir):
 
 def test_cos_topk_blocked_plan_has_no_shuffle(spark, sf_dir):
     # The scoring path itself is shuffle-free: the ONLY allowed Exchange is
-    # the round-robin scan-width normalization below the mapInPandas
-    # (ensure_min_partitions — a no-op on real-scale scans, where the plan
-    # is scan -> mapInPandas with no Exchange at all). Nothing may shuffle
-    # AFTER the scoring operator.
+    # the round-robin scan-width normalization below the scoring UDF's
+    # ArrowEvalPython node (ensure_min_partitions — a no-op on real-scale
+    # scans, where the plan is scan -> score -> generate with no Exchange
+    # at all). Nothing may shuffle AFTER the scoring operator.
     plan = formatted_plan(all_queries()["cos_topk_blocked"](spark, sf_dir))
+    assert "blocked_topk_scores(" in plan, plan
     exchanges = plan.count("Exchange (")  # tree lines only, not detail headers
     assert exchanges <= 1, plan
     if exchanges:
         assert "RoundRobinPartitioning" in plan, plan
-        map_pos = plan.find("MapInPandas")
-        assert map_pos != -1 and plan.find("Exchange", 0, map_pos) == -1, plan
+        score_pos = plan.find("ArrowEvalPython (")
+        assert score_pos != -1 and plan.find("Exchange", 0, score_pos) == -1, plan
 
 
 def test_whole_stage_codegen_on_hot_path(spark, sf_dir):

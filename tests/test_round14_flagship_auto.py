@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 def test_flagship_auto_selects_join_rung_at_reference_scale(spark, sf_dir):
     """mapping_report (default strategy='auto') at the golden scale:
     the plan carries the cross-join rung's BroadcastNestedLoopJoin and
-    NO MapInPandas ANN stage (the blocked rung's physical signature)."""
+    NOT the blocked rung's scoring UDF."""
     import __spark_entry__ as entry
 
     from asctb_ct_label_mapper_spark.plans.audit import formatted_plan
@@ -21,7 +21,7 @@ def test_flagship_auto_selects_join_rung_at_reference_scale(spark, sf_dir):
     df = entry.queries()["mapping_report"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "BroadcastNestedLoopJoin" in plan
-    assert "MapInPandas" not in plan
+    assert "blocked_topk_scores(" not in plan
 
 
 def test_choose_impl_routes_flagship_scales():

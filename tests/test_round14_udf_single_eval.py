@@ -45,3 +45,40 @@ def test_bloom_prefilter_membership_evaluates_once_per_branch(spark, sf_dir):
     # pre-fix plan carried two per branch plus a stray corpus-side eval
     # (five total)
     assert len(_eval_nodes(plan)) <= 2, plan
+
+
+def test_flagship_blocked_chain_evaluates_once_on_every_core(spark):
+    """The blocked rung's scorer chains with the flagship's cleaner and
+    encoder into ONE ArrowEvalPython node: the label seed hash-shuffles to
+    ``defaultParallelism`` partitions (AQE keeps an explicit count) and
+    no round-robin re-spread of 768-d vectors follows. An outer generator
+    keeps ``InferFiltersFromGenerate`` from pushing a ``size(...) > 0``
+    filter below the seed shuffle, which would re-run the whole chain."""
+    from asctb_ct_label_mapper_spark.operators.mapping import (
+        map_labels_to_reference,
+    )
+    from asctb_ct_label_mapper_spark.plans.audit import formatted_plan
+
+    labels = spark.createDataFrame(
+        [("s", f"basal cell {i}") for i in range(40)] + [("s", "basal cell 0")],
+        "source string, raw_input_label string",
+    )
+    reference = spark.createDataFrame(
+        [
+            (f"C{i}", f"cell {i}", "d", f"cell {i} d", f"cell {i}",
+             [float(i), 1.0] + [0.0] * 14)
+            for i in range(5)
+        ],
+        "CT_ID string, CT_NAME string, definition string, all_text string, "
+        "ct_name_cleaned string, embedding array<float>",
+    )
+    df = map_labels_to_reference(labels, reference, k=2, strategy="blocked")
+    plan = formatted_plan(df)
+    assert len(_eval_nodes(plan)) == 1, plan
+    assert "blocked_topk_scores(" in plan, plan
+    assert "RoundRobinPartitioning" not in plan, plan
+    n = spark.sparkContext.defaultParallelism
+    assert re.search(
+        rf"hashpartitioning\(raw_input_label#\d+, {n}\), REPARTITION_BY_NUM", plan
+    ), plan
+    assert df.count() == 40

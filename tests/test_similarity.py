@@ -491,3 +491,45 @@ class TestIvfPq:
         # call, not a hint baked into the operator)
         analyzed = out._jdf.queryExecution().analyzed().toString()
         assert analyzed.count("ResolvedHint") == 1, analyzed.count("ResolvedHint")
+
+
+@pytest.mark.parametrize("qname", ["cos_topk_blocked", "cos_topk_quantized"])
+def test_blocked_rung_empty_reference_agrees_with_duckdb(spark, sf_dir, tmp_path, qname):
+    """A 0-row ``embeddings`` table (so an empty reference): the blocked
+    kernel returns its empty long form instead of raising numpy's
+    AxisError from normalizing a (0,)-shaped matrix, and DuckDB agrees."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+    from tools.check_correctness import table_signature
+
+    empty = pq.read_table(f"{sf_dir}/embeddings.parquet").slice(0, 0)
+    pq.write_table(empty, tmp_path / "embeddings.parquet")
+    got = entry.queries()[qname](spark, str(tmp_path))
+    rows = [tuple(r) for r in got.collect()]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet'"
+    )
+    rel = con.sql(entry.oracle_sql()[qname])
+    want = table_signature(rel.columns, rel.fetchall())
+    assert rows == []
+    assert table_signature(got.columns, rows) == want
+
+
+def test_blocked_null_query_vector_yields_one_null_row(spark):
+    """A null query vector has no matches: the outer generator keeps the
+    query as one row with null ref_id/score/rank; other queries in the
+    same batch are scored as usual."""
+    qdf = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, None)], "vec_id long, embedding array<float>"
+    )
+    rdf = spark.createDataFrame(
+        [(10, [1.0, 0.0]), (11, [0.0, 1.0])], "vec_id long, embedding array<float>"
+    )
+    got = sorted(
+        tuple(r) for r in top_k_similarity_blocked(qdf, rdf, 2, ["vec_id"], "vec_id")
+        .select("vec_id", "ref_id", "score", "rank").collect()
+    )
+    assert got == [(1, 10, 1.0, 1), (1, 11, 0.0, 2), (2, None, None, None)]
